@@ -42,10 +42,6 @@ BURST_MAX = int(os.environ.get("SPARK_GRAFT_BURST", "1024"))
 # Exchange) rather than the in-memory union chain.  Set =0 to compare.
 DURABLE_SEEN = os.environ.get("SPARK_GRAFT_DURABLE_SEEN", "1") not in ("",
                                                                        "0")
-# A/B knob for the URL-seen bloom prefilter (default follows the engine
-# default: OFF — see CrawlConfig.use_bloom_prefilter + BENCH/BASELINE.md
-# round-4 A/B; set =1 to measure the prefilter path).
-BLOOM = os.environ.get("SPARK_GRAFT_BLOOM", "0") not in ("", "0")
 
 
 def _spark(cores: int):
@@ -102,7 +98,7 @@ def bench_crawl(spark, work_root: str) -> dict:
     shutil.rmtree(work, ignore_errors=True)
     cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
                         max_steps=CRAWL_STEPS, window_ms=WINDOW_MS,
-                        burst_max=BURST_MAX, use_bloom_prefilter=BLOOM)
+                        burst_max=BURST_MAX)
     job = CrawlJob(
         spark, spec, cfg,
         images=spark.read.parquet(paths["images"]),

@@ -44,8 +44,7 @@ def run_mode(spark, mode: str, n_hosts: int) -> dict:
     spec = websim.SPECS["tiny"]  # images unused: synthetic hosts all 404
     work = f"/tmp/heritrix_qs_{mode}_{n_hosts}"
     shutil.rmtree(work, ignore_errors=True)
-    cfg = C.CrawlConfig(queue_state_mode=mode, max_steps=10_000,
-                        use_bloom_prefilter=False)
+    cfg = C.CrawlConfig(queue_state_mode=mode, max_steps=10_000)
     images = spark.createDataFrame([], "image_id string, bytes binary")
     robots = spark.createDataFrame(
         [], "host string, path_prefix string, allow boolean,"

@@ -187,36 +187,6 @@ class CrawlConfig:
     # where the unsalted bound would be 10^8 rows in one task).  Set
     # salt_auto_rows=0 to force the salted path unconditionally.
     salt_auto_rows: int = 262_144
-    # Broadcast bloom URL-seen prefilter (BloomUriUniqFilter analog —
-    # north_star).  Once the seen set exceeds bloom_min_seen rows, the
-    # engine builds a bloom_bits-bit bitmap executor-side, broadcasts it,
-    # and routes only bloom-positive candidates through the exact
-    # anti-join; bloom-negative candidates are provably unseen and skip
-    # it.  Output is ALWAYS exact (the bloom's false positives merely add
-    # anti-join input; Heritrix's BloomUriUniqFilter silently drops on
-    # false positives, which the north_rule forbids — prefilter-only is
-    # the documented deviation).  The bitmap is maintained incrementally
-    # from each superstep's discoveries.
-    # Sizing is ADAPTIVE: bloom_bits is the floor; at activation (and on
-    # 4x seen-set growth) the bitmap is rebuilt at ~8 bits/key (next pow2
-    # of 8 x seen, FP ~2.4% at k=4), capped at bloom_max_bits.  Past the
-    # cap the filter saturates (fill -> 1, FP -> 1 — every probe pays the
-    # UDF AND the exact anti-join, pure overhead), so once the cap gives
-    # < 4 bits/key the prefilter suspends instead.  Output is identical
-    # in every regime (prefilter-only, exact anti-join always backs it).
-    #
-    # DEFAULT OFF (round-4 A/B, BENCH/BASELINE.md): against the durable
-    # BUCKETED seen table the exact anti-join is storage-partitioned and
-    # cheap, while the probe ships every distinct candidate fp through an
-    # Arrow UDF round-trip — measured 9.3k vs 12.9k URLs/s at 16 cores
-    # on the 10^7-URL bench even with the bitmap correctly sized.  The
-    # component (BloomUriUniqFilter analog, U3) remains fully built,
-    # equivalence-tested, and opt-in for deployments where the seen scan
-    # dominates (e.g. non-bucketed external stores).
-    use_bloom_prefilter: bool = False
-    bloom_min_seen: int = 100_000
-    bloom_bits: int = 1 << 23
-    bloom_max_bits: int = 1 << 29
     cost_policy: str = "unit"  # unit | wag | anticalendar
     # QueueAssignmentPolicy (F8): how URLs map to work queues.
     #   hostname — HostnameQueueAssignmentPolicy (default): lowercase
@@ -263,50 +233,6 @@ class CrawlConfig:
     # boxes, so 25k promotes within one step of it either way.
     # Re-measure with bench_queue_state.py when hardware changes.
     queue_state_auto_threshold: int = 25_000
-    # Frontier storage tiers (the N→4N scaling shape).
-    #   True  — two-tier frontier: a compacted BASE cached columnar,
-    #           hash-partitioned by (class_key, salt) and sorted by the
-    #           priority key, so the per-step burst top-k runs with NO
-    #           Exchange and NO Sort over it (window + WindowGroupLimit
-    #           directly on the InMemoryRelation); processed rows leave
-    #           via broadcast anti-joins; new/retry rows accumulate in a
-    #           small DELTA (its own bounded window) and fold into the
-    #           base when removed+delta outgrow frontier_compact_frac of
-    #           it.  Per-step shuffle volume is bounded by the burst +
-    #           discoveries, independent of frontier size — the 10^10
-    #           contract.
-    #   False — single merged hot frame, full-frontier window shuffle and
-    #           rewrite every step (the pre-round-3 shape; kept as the
-    #           equivalence fallback).
-    frontier_tiers: bool = True
-    # Compact when (since-compaction removed + delta) exceeds this
-    # fraction of the base — bounds both the broadcast anti-join size and
-    # the delta window's exchange, and amortizes the one full-frontier
-    # exchange+sort to once per ~1/frac of the frontier turning over.
-    frontier_compact_frac: float = 0.25
-    # MINOR compaction: fold just the removal chain into the base with a
-    # narrow, shuffle-free, sort-free rewrite (broadcast anti-join +
-    # localCheckpoint — partitioning and ordering survive) whenever the
-    # accumulated removed fps exceed this fraction of the base.  Bounds
-    # the removal broadcast (which every per-step job rebuilds) without
-    # paying the major compaction's full exchange+sort.
-    frontier_minor_frac: float = 0.08
-    # Image-existence probe placement (the FetchHTTP hit/404 source).
-    #   auto      — broadcast join below ~200k images, sorted-id Arrow
-    #               array above (default);
-    #   broadcast — force the broadcast join;
-    #   array     — force the once-built sorted numpy id array + Arrow
-    #               searchsorted UDF (executor-resident for the crawl);
-    #   bucketed  — storage-partitioned probe: the id projection is
-    #               written ONCE as a bucketed+sorted table (executor-side
-    #               write, ids never pass through the driver) and each
-    #               step's burst sort-merge-joins it bucket-aligned — the
-    #               plan has NO Exchange on the images side (only the
-    #               work-proportional burst shuffles).  The 10^10-image
-    #               path: driver memory O(1), per-step images-side read is
-    #               bucket-pruned parquet from page cache.
-    image_probe: str = "auto"
-    image_probe_buckets: int = 32
     honor_crawl_delay: bool = False  # engine superset mode (SURVEY §2.H R3)
     # Scope (DecideRule fold)
     max_link_hops: int = 20

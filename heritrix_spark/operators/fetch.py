@@ -7,7 +7,7 @@ seam:
 1. **Status verdict** on the bounded burst (hit / 404 / transient-retry).
    The sandbox-normative implementation is the image-corpus existence
    probe (``CrawlJob.__init__``: broadcast join / sorted-id Arrow array /
-   bucketed storage-partitioned join, per ``cfg.image_probe``) plus the
+   bucketed storage-partitioned join, chosen by corpus size) plus the
    deterministic virtual latency/payload lattices in :mod:`config`.
 2. **Payload attachment** at checkpoint time (the ``fetched`` sink joins
    bytes by ``image_id`` — deferred so per-step jobs never move payload

@@ -46,21 +46,16 @@ def bloom_positions_py(fp: int, m: int) -> list[int]:
     return [hash_str_py(str(i), str(int(fp))) % m for i in range(BLOOM_K)]
 
 
-def build_bloom_packed(df: DataFrame, fp_col: str, m: int,
-                       fold_partitions: int | None = None) -> np.ndarray:
-    """Build the m-bit bloom bitmap executor-side, returned PACKED
-    (``m/8`` uint8 bytes, big-endian bit order): positions are computed by
-    JVM exprs, each Arrow partition folds into a local numpy bitmap, and
-    the driver collects one packed blob per partition and ORs them — never
-    the raw position rows.  ``fold_partitions`` caps the number of blobs
-    collected (used for small per-step deltas, where 8 blobs beat 32);
-    driver traffic is O(m × partitions), independent of row count — the
-    property that keeps per-step maintenance flat at 100× discovery rates.
+def build_bloom_bits(df: DataFrame, fp_col: str, m: int) -> np.ndarray:
+    """Build the m-bit bloom bitmap executor-side (SeenFilter's cached
+    bool form): positions are computed by JVM exprs, each Arrow partition
+    folds into a local numpy bitmap, and the driver collects one PACKED
+    blob per partition (``m/8`` uint8 bytes, big-endian bit order) and
+    ORs them — never the raw position rows.  Driver traffic is
+    O(m × partitions), independent of row count.
     """
     pos = df.select(F.explode(F.array(
         *bloom_positions_expr(F.col(fp_col), m))).alias("p"))
-    if fold_partitions is not None:
-        pos = pos.coalesce(fold_partitions)
 
     def to_bitmap(batches):
         bits = np.zeros(m, dtype=bool)
@@ -75,39 +70,7 @@ def build_bloom_packed(df: DataFrame, fp_col: str, m: int,
     packed = np.zeros((m + 7) // 8, dtype=np.uint8)
     for r in pos.mapInPandas(to_bitmap, "b binary").collect():
         packed |= np.frombuffer(r["b"], dtype=np.uint8)
-    return packed
-
-
-def build_bloom_bits(df: DataFrame, fp_col: str, m: int) -> np.ndarray:
-    """Unpacked-bool variant of :func:`build_bloom_packed` (SeenFilter's
-    cached form)."""
-    return np.unpackbits(build_bloom_packed(df, fp_col, m))[:m].astype(bool)
-
-
-def bloom_set_packed_py(packed: np.ndarray, fp: int) -> None:
-    """Set one fingerprint's k bits in a PACKED bitmap (driver-side mirror
-    hashing — for O(#new-queues) prerequisite notes only; bulk deltas fold
-    executor-side via :func:`build_bloom_packed`)."""
-    for p in bloom_positions_py(fp, len(packed) * 8):
-        packed[p >> 3] |= 128 >> (p & 7)
-
-
-def make_might_contain_packed_udf(spark, packed: np.ndarray):
-    """Vectorized bloom probe over a PACKED bitmap: positions arrive as
-    JVM-computed columns; the UDF masks bits with numpy fancy-indexing —
-    the broadcast payload is m/8 bytes (8x smaller than the bool form)."""
-    b = spark.sparkContext.broadcast(packed)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(*pos_cols: pd.Series) -> pd.Series:
-        blm = b.value
-        out = np.ones(len(pos_cols[0]), dtype=bool)
-        for pc in pos_cols:
-            p = pc.to_numpy(dtype=np.int64)
-            out &= (blm[p >> 3] & (128 >> (p & 7)).astype(np.uint8)) != 0
-        return pd.Series(out)
-
-    return might_contain
+    return np.unpackbits(packed)[:m].astype(bool)
 
 
 def make_might_contain_udf(spark, bits: np.ndarray):

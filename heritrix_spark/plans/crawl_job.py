@@ -18,9 +18,10 @@ input and the delta merge overlapped on daemon threads — every
 per-step job touches ONLY the narrow HOT frontier columns, URL strings
 never enter a per-step shuffle):
 
-    burst  = frontier_hot ⋈ broadcast(queue_state + clock columns) →
-             salted two-phase row_number per class_key over (directive,
-             cost, ordinal) (rank<=k filters rewritten to map-side +
+    burst  = two-tier frontier (sorted base − removed, ∪ delta) ⋈
+             broadcast(queue_state + clock columns) → per-(queue, salt)
+             row_number over (directive, cost, ordinal), no Exchange or
+             Sort on the base (rank<=k filters rewritten to map-side +
              final WindowGroupLimit — Zipf-head queues cost bounded
              top-k, never an unbounded sort) → robots verdict (a
              precomputed hot bool — rules are crawl-static, evaluated
@@ -53,8 +54,6 @@ never enter a per-step shuffle):
     cold'  = cold ∪ new(strings) — LAZY append-only union of
              materialized increments; compacted to live fingerprints at
              checkpoint time (never scanned by the scheduling law)
-    (+ a bloom-delta fold job while the prefilter is active and
-     discovering — executor-side packed bitmaps, ~MB driver traffic)
     lineage/fetched/metrics/seen-delta append lazily off ``sel`` carrying
     url_fp only; URL strings attach at checkpoint flush from the cold
     table (same deferred pattern as the payload join); durable parquet
@@ -78,11 +77,10 @@ single-task sort; candidate batches are bounded by
 burst × out-degree; the images existence probe is a once-built sorted id
 array probed by an Arrow UDF (a per-step broadcast hash build would be a
 serial stage per superstep); payload bytes join only the selected
-200-rows; the seen anti-join gets an explicit broadcast-bloom prefilter
-once the set passes ``bloom_min_seen`` (plus Spark's AQE runtime bloom,
-session.py) — blooms are prefilters only, the exact join is normative
-(BloomUriUniqFilter's silent false-positive drops are exactly what the
-north_rule forbids).
+200-rows; the seen anti-join is exact (bucket-aligned with the durable
+seen table) and its only prefilter is Spark's runtime bloom-filter join
+(session.py) — BloomUriUniqFilter's silent false-positive drops are
+exactly what the north_rule forbids.
 """
 
 from __future__ import annotations
@@ -117,7 +115,6 @@ from heritrix_spark.functions.queue_assign import (
     queue_key_expr,
 )
 from heritrix_spark.operators import robots as R
-from heritrix_spark.operators import uniq as U
 from heritrix_spark.operators.extract import image_id_expr, outlinks_of
 from heritrix_spark.operators.postfetch import gate_expr
 from heritrix_spark.operators.schedule import top_k_per_queue
@@ -288,6 +285,24 @@ def _normalize_queues(pdf: pd.DataFrame) -> pd.DataFrame:
 class CrawlJob:
     """One crawl: seeds → supersteps → checkpointed engine tables."""
 
+    # Image-existence probe placement, chosen by corpus size (round-3
+    # judge wrong #1): broadcast join up to IMG_ARRAY_ROWS ids, the
+    # executor-resident sorted array up to IMG_BUCKETED_ROWS, the
+    # storage-partitioned bucketed probe beyond — the array path's
+    # one-time toPandas() of every id is ~80 MB at 10^7 (fine) but ~80 GB
+    # of driver heap at 10^10 (fatal), so past it the probe must be the
+    # one whose driver memory is O(1).
+    IMG_ARRAY_ROWS = 200_000
+    IMG_BUCKETED_ROWS = 10_000_000
+    IMG_PROBE_BUCKETS = 32
+    # Tier compaction triggers, as fractions of the base's row count:
+    # major (exchange+sort, amortized to once per ~1/frac of the frontier
+    # turning over) when removed + delta exceed FRONTIER_COMPACT_FRAC;
+    # minor (narrow removal fold) when removed alone exceeds
+    # FRONTIER_MINOR_FRAC — see _maybe_compact_tiers/_maybe_minor_compact.
+    FRONTIER_COMPACT_FRAC = 0.25
+    FRONTIER_MINOR_FRAC = 0.08
+
     def __init__(self, spark: SparkSession, spec: FixtureSpec,
                  cfg: C.CrawlConfig, images: DataFrame,
                  robots_rules: DataFrame, host_config: DataFrame | None,
@@ -327,22 +342,10 @@ class CrawlJob:
             raise ValueError(
                 f"queue_state_mode must be one of pandas|dataframe|auto, "
                 f"got {cfg.queue_state_mode!r}")
-        if cfg.image_probe not in ("auto", "broadcast", "array",
-                                   "bucketed"):
-            raise ValueError(
-                f"image_probe must be one of auto|broadcast|array|"
-                f"bucketed, got {cfg.image_probe!r}")
-        probe = cfg.image_probe
-        if probe == "auto":
-            # Tiered by corpus size (round-3 judge wrong #1): broadcast
-            # below 200k ids, executor-resident sorted array to 10^7,
-            # storage-partitioned bucketed probe beyond — the array path's
-            # one-time toPandas() of every id is ~80 MB at 10^7 (fine) but
-            # ~80 GB of driver heap at 10^10 (fatal), so auto must hand
-            # off to the probe whose driver memory is O(1).
-            n_img = images.count()
-            probe = ("bucketed" if n_img > 10_000_000
-                     else "array" if n_img > 200_000 else "broadcast")
+        n_img = images.count()
+        probe = ("bucketed" if n_img > self.IMG_BUCKETED_ROWS
+                 else "array" if n_img > self.IMG_ARRAY_ROWS
+                 else "broadcast")
         if probe == "bucketed":
             # Storage-partitioned probe (SURVEY §4, the 10^10-image path):
             # the id projection is written ONCE as a bucketed+sorted
@@ -359,7 +362,7 @@ class CrawlJob:
                 _image_num_expr(F.col("image_id")).alias("image_num"))
              .withColumn("_exists", F.lit(True))
              .write.mode("overwrite")
-             .bucketBy(cfg.image_probe_buckets, "image_num")
+             .bucketBy(self.IMG_PROBE_BUCKETS, "image_num")
              .sortBy("image_num")
              .option("path", os.path.join(work_dir, "img_probe"))
              .format("parquet").saveAsTable(tbl))
@@ -399,16 +402,15 @@ class CrawlJob:
         self.frontier_cold = spark.createDataFrame([], COLD_SCHEMA)
         self.frontier_cold2 = spark.createDataFrame([], COLD2_SCHEMA)
         self._cold_dirty_steps = 0
-        # Two-tier frontier state (cfg.frontier_tiers): BASE is a
-        # compacted, (class_key, _salt)-partitioned, priority-sorted
-        # columnar cache — the burst window scans it with no Exchange and
-        # no Sort; DELTA holds rows added since the last compaction;
-        # _removed holds the per-step processed-fp frames (lazy slices of
-        # the checkpointed burst) that anti-join the base out of scans
-        # until compaction folds them in.  frontier_hot stays the logical
-        # view (base − removed) ∪ delta for every non-hot-path reader
+        # Two-tier frontier state: BASE is a compacted,
+        # (class_key, _salt)-partitioned, priority-sorted columnar cache —
+        # the burst window scans it with no Exchange and no Sort; DELTA
+        # holds rows added since the last compaction; _removed holds the
+        # per-step processed-fp frames (lazy slices of the checkpointed
+        # burst) that anti-join the base out of scans until compaction
+        # folds them in.  frontier_hot stays the logical view
+        # (base − removed) ∪ delta for every non-hot-path reader
         # (checkpoint, reports, clock aggregates).
-        self.tiered = cfg.frontier_tiers
         self._base: DataFrame | None = None
         self._base_rows = 0
         self._delta: DataFrame = spark.createDataFrame([], HOT_SCHEMA)
@@ -472,29 +474,7 @@ class CrawlJob:
         # from the superstep's single stats pass — the virtual clock
         # advances from this map with no extra Spark job.
         self._me_map: dict[str, int] = {}
-        # Broadcast bloom URL-seen prefilter state (BloomUriUniqFilter
-        # analog): the bitmap activates once the seen set passes
-        # cfg.bloom_min_seen and lives PACKED (m/8 uint8 bytes).  Per-step
-        # maintenance is executor-side: the step's discovery delta folds
-        # into per-partition packed bitmaps (build_bloom_packed) and the
-        # driver ORs a handful of ~MB blobs — never a collect of raw
-        # fingerprints, never per-fp Python (the round-2 scale-killer).
-        # Only the O(#new-queues) prerequisite fps are noted driver-side.
-        self._seen_count = 0
-        self._bloom_nbits = cfg.bloom_bits
-        self._bloom_bits: np.ndarray | None = None  # packed uint8
-        self._bloom_udf = None
-        self._bloom_dirty = False
-        self._step_cache = None
-        # Adaptive idle-off: a bloom prefilter only pays while the crawl
-        # DISCOVERS (unseen candidates skip the anti-join).  In a drain
-        # phase every candidate is a duplicate, so the probe is pure
-        # overhead — after 3 zero-discovery steps the bitmap is dropped
-        # (plain anti-join), and it re-arms once discoveries resume
-        # (rebuilt from the seen set).  Never affects output.
-        self._bloom_was_active = False
-        self._bloom_idle_steps = 0
-        self._bloom_suspended = False
+        self._step_cache = None  # per-step candidate batch (persisted)
         # Per-phase trace callback (set by superstep — lets inner helpers
         # add sub-phase marks) and the accumulated per-step phase wall
         # times: {phase: [sec, ...]} appended every superstep.  Collection
@@ -535,20 +515,20 @@ class CrawlJob:
         self.frontier_cold = self._ck(full.select(*COLD_COLS))
         self.frontier_cold2 = self._ck(full.select(*COLD2_COLS))
         self._cold_dirty_steps = 0
-        if self.tiered:
-            # Rebuild the tiers from the flat snapshot: everything starts
-            # in the delta, then one immediate compaction establishes the
-            # partitioned+sorted base.
-            self._base = None
-            self._base_rows = 0
-            self._removed = []
-            self._removed_rows = 0
-            self._delta = self.frontier_hot
-            self._delta_rows = 0
-            self._maybe_compact_tiers(force=True)
-            self._refresh_hot_view()
+        # Rebuild the tiers from the flat snapshot: everything starts in
+        # the delta, then one immediate compaction establishes the
+        # partitioned+sorted base.
+        self._base = None
+        self._base_rows = 0
+        self._removed = []
+        self._removed_rows = 0
+        self._delta = self.frontier_hot
+        self._delta_rows = 0
+        self._maybe_compact_tiers(force=True)
+        self._refresh_hot_view()
 
-    def _ck(self, df: DataFrame, parts: int | None = None) -> DataFrame:
+    def _ck(self, df: DataFrame, parts: int | None = None,
+            eager: bool = True) -> DataFrame:
         """Materialize with bounded partition count AND bounded statistics.
 
         The per-step state merges are unions; left alone, partition counts
@@ -572,10 +552,17 @@ class CrawlJob:
         materialized RDD as a fresh LogicalRDD drops the origin stats;
         join planning falls to AQE's runtime sizes, and every explicitly
         small side is already ``F.broadcast``-hinted.
+
+        ``eager=False`` materializes on first use (ZERO dedicated jobs):
+        the first consuming job computes and persists the RDD, every later
+        consumer scans the blocks — for small per-step frames whose first
+        consumer is itself a materialization (e.g. new rows folded into
+        the delta merge), where an eager checkpoint would pay a whole
+        extra job of fixed task/codegen overhead.
         """
         n = parts or int(self.spark.conf.get("spark.sql.shuffle.partitions",
                                              "8"))
-        out = df.coalesce(n).localCheckpoint(eager=True)
+        out = df.coalesce(n).localCheckpoint(eager=eager)
         try:
             jdf = out._jdf
             fresh = self.spark._jsparkSession.internalCreateDataFrame(
@@ -583,58 +570,16 @@ class CrawlJob:
             return DataFrame(fresh, self.spark)
         except Exception:  # non-classic sessions: keep the checkpoint
             return out
-
-    def _ck_lazy(self, df: DataFrame, parts: int | None = None) -> DataFrame:
-        """Materialize-on-first-use checkpoint (same stats firewall as
-        :meth:`_ck`, ZERO dedicated jobs): the first consuming job
-        computes and persists the RDD, every later consumer scans the
-        blocks — used for small per-step frames whose first consumer is
-        itself a materialization (e.g. new rows folded into the delta
-        merge), where an eager checkpoint would pay a whole extra job of
-        fixed task/codegen overhead."""
-        n = parts or int(self.spark.conf.get("spark.sql.shuffle.partitions",
-                                             "8"))
-        out = df.coalesce(n).localCheckpoint(eager=False)
-        try:
-            jdf = out._jdf
-            fresh = self.spark._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False)
-            return DataFrame(fresh, self.spark)
-        except Exception:  # non-classic sessions: keep the checkpoint
-            return out
-
-    def _collect_async(self, df: DataFrame):
-        """Launch ``df.collect()`` on a daemon thread and return a join
-        callable — used to OVERLAP independent per-step jobs (Spark's
-        scheduler interleaves the concurrent jobs' tasks; Py4J and job
-        submission are thread-safe).  Only safe for plans whose inputs
-        are already materialized and while no session conf is being
-        mutated (the superstep's conf toggles all happen after every
-        async join).  Exceptions re-raise at join."""
-        out: dict = {}
-
-        def run():
-            try:
-                out["rows"] = df.collect()
-            except BaseException as e:  # noqa: BLE001 — re-raised at join
-                out["err"] = e
-
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-
-        def join():
-            th.join()
-            if "err" in out:
-                raise out["err"]
-            return out["rows"]
-
-        return join
 
     def _run_async(self, fn):
-        """Run ``fn`` (a Spark action over an ALREADY-BUILT plan) on a
-        daemon thread; returns a join callable.  Same safety contract as
-        :meth:`_collect_async`: inputs materialized, no session conf
-        mutation until joined."""
+        """Run ``fn`` (a Spark action over an ALREADY-BUILT plan, e.g.
+        ``df.collect``) on a daemon thread and return a join callable —
+        used to OVERLAP independent per-step jobs (Spark's scheduler
+        interleaves the concurrent jobs' tasks; Py4J and job submission
+        are thread-safe).  Only safe for plans whose inputs are already
+        materialized and while no session conf is being mutated (the
+        superstep's conf toggles all happen after every async join).
+        Exceptions re-raise at join."""
         out: dict = {}
 
         def run():
@@ -702,12 +647,12 @@ class CrawlJob:
 
     def _maybe_compact_tiers(self, force: bool = False) -> None:
         """Fold delta + removals into a fresh base when they outgrow
-        ``frontier_compact_frac`` of it — the ONE amortized full-frontier
+        ``FRONTIER_COMPACT_FRAC`` of it — the ONE amortized full-frontier
         exchange+sort; every per-step exchange stays bounded by
         burst + discoveries."""
         turn = self._removed_rows + self._delta_rows
         if not force and turn <= max(
-                self.cfg.frontier_compact_frac * self._base_rows, 1):
+                self.FRONTIER_COMPACT_FRAC * self._base_rows, 1):
             return
         live = self._base_live()
         d = self._delta.withColumn("_salt", self._salt_expr())
@@ -746,12 +691,12 @@ class CrawlJob:
         partitioning and ordering survive, same AQE-off mechanics as the
         major compaction).  Keeps the removal broadcast — which every
         per-step job touching the frontier rebuilds — bounded by
-        ``frontier_minor_frac`` of the base instead of growing without
+        ``FRONTIER_MINOR_FRAC`` of the base instead of growing without
         bound between major compactions."""
         if self._base is None or not self._removed:
             return
         if (self._removed_rows
-                <= self.cfg.frontier_minor_frac * self._base_rows):
+                <= self.FRONTIER_MINOR_FRAC * self._base_rows):
             return
         live = self._base_live()
         aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -991,7 +936,6 @@ class CrawlJob:
         if self.qmode == "dataframe":
             pre, wmap, kills, counts = self._merge_candidate_queues_sdf(c)
             n_new = int(counts["n_surv"]) + int(counts["n_pre"])
-            self._seen_count += n_new
             self._prereq_canons = None  # claims live in the seen set now
         else:
             stats = c.groupBy("class_key", "host").agg(
@@ -1003,15 +947,11 @@ class CrawlJob:
             fin = fin.unionByName(pre)
         new_rows = self._ck(fin)
         self._journal_scheduled(new_rows)
-        if self.tiered:
-            self._delta = self._ck(
-                self._delta.unionByName(new_rows.select(*HOT_COLS)))
-            self._delta_rows += n_new
-            self._maybe_compact_tiers()
-            self._refresh_hot_view()
-        else:
-            self.frontier_hot = self._ck(
-                self.frontier_hot.unionByName(new_rows.select(*HOT_COLS)))
+        self._delta = self._ck(
+            self._delta.unionByName(new_rows.select(*HOT_COLS)))
+        self._delta_rows += n_new
+        self._maybe_compact_tiers()
+        self._refresh_hot_view()
         self.frontier_cold = self._ck(
             self.frontier_cold.unionByName(new_rows.select(*COLD_COLS)))
         self.frontier_cold2 = self._ck(
@@ -1027,11 +967,6 @@ class CrawlJob:
                     ck = r["class_key"]
                     me = int(r["cme"])
                     self._me_map[ck] = min(self._me_map.get(ck, me), me)
-        # Fold the MATERIALIZED new rows (survivors + prerequisites) —
-        # the bitmap must stay a superset of seen, and in the frame-based
-        # merge the prereq fps never pass through a driver-side note.
-        self._bloom_fold_delta(new_rows, n_new)
-        self._maybe_activate_bloom()
         self._maybe_promote_queue_state()
         self._advance_clock()
 
@@ -1164,26 +1099,7 @@ class CrawlJob:
         # exchange; the seen side never exchanges at all).
         fps = c0.select("url_fp").repartition(
             self.SEEN_BUCKETS, F.col("url_fp")).dropDuplicates(["url_fp"])
-        if self._bloom_bits is not None:
-            # Broadcast bloom prefilter: bloom-negative fps are provably
-            # unseen and skip the anti-join (and the seen scan) entirely;
-            # bloom-positive fps are verified exactly (never inherits
-            # false-positive drops).
-            if self._bloom_udf is None or self._bloom_dirty:
-                self._bloom_udf = U.make_might_contain_packed_udf(
-                    self.spark, self._bloom_bits)
-                self._bloom_dirty = False
-            fps = fps.withColumn("_maybe", self._bloom_udf(
-                *U.bloom_positions_expr(F.col("url_fp"),
-                                        self._bloom_nbits)))
-            unseen = (fps.where(~F.col("_maybe")).drop("_maybe")
-                      .unionByName(
-                          fps.where(F.col("_maybe")).drop("_maybe")
-                          .join(self.seen.select("url_fp"), "url_fp",
-                                "left_anti")))
-        else:
-            unseen = fps.join(self.seen.select("url_fp"), "url_fp",
-                              "left_anti")
+        unseen = fps.join(self.seen.select("url_fp"), "url_fp", "left_anti")
         if materialize:
             # The broadcast-vs-shuffle attach decision needs the unseen
             # cardinality — observed on the checkpoint job itself rather
@@ -1264,89 +1180,6 @@ class CrawlJob:
             .alias("pshapes"),
         ]
         return aggs
-
-    def _bloom_note(self, fps) -> None:
-        """Set fingerprints' bits in the packed bitmap (xxhash64 mirror).
-        Driver-side on purpose: callers pass only O(#new-queues)
-        prerequisite fps; bulk candidate deltas fold executor-side in
-        :meth:`_bloom_fold_delta`."""
-        if self._bloom_bits is None:
-            return
-        for fp in fps:
-            U.bloom_set_packed_py(self._bloom_bits, int(fp))
-            self._bloom_dirty = True
-
-    def _bloom_fold_delta(self, c: DataFrame, n_new: int) -> None:
-        """Fold a step's discovery delta into the bitmap executor-side:
-        per-partition packed-bitmap build over the MATERIALIZED candidate
-        frame, driver ORs <= fold_partitions ~MB blobs.  The frame may
-        include prereq-shape-killed rows — a stale bit only adds
-        exact-verify work, never drops (superset invariant preserved)."""
-        if self._bloom_bits is None or n_new == 0:
-            return
-        self._bloom_bits |= U.build_bloom_packed(
-            c.select("url_fp"), "url_fp", self._bloom_nbits,
-            fold_partitions=8)
-        self._bloom_dirty = True
-
-    def _bloom_size_for(self, n: int) -> int | None:
-        """Bitmap size for ``n`` seen keys: next pow2 of 8 bits/key
-        (FP ~2.4% at k=4), floored at cfg.bloom_bits, capped at
-        cfg.bloom_max_bits.  None when even the cap gives < 4 bits/key —
-        the filter would saturate (FP >= ~16% and climbing), so the probe
-        cost can no longer pay for the anti-join input it removes."""
-        cfg = self.cfg
-        want = max(cfg.bloom_bits, 1 << max(0, (8 * max(n, 1) - 1)
-                                            .bit_length()))
-        if want <= cfg.bloom_max_bits:
-            return want
-        return cfg.bloom_max_bits if cfg.bloom_max_bits >= 4 * n else None
-
-    def _maybe_activate_bloom(self) -> None:
-        cfg = self.cfg
-        if (cfg.use_bloom_prefilter and self._bloom_bits is None
-                and not self._bloom_suspended
-                and self._seen_count >= cfg.bloom_min_seen):
-            nbits = self._bloom_size_for(self._seen_count)
-            if nbits is None:
-                self._bloom_suspended = True  # saturated even at the cap
-                return
-            self._bloom_nbits = nbits
-            self._bloom_bits = U.build_bloom_packed(
-                self.seen, "url_fp", nbits)
-            self._bloom_dirty = True
-            self._bloom_was_active = True
-
-    def _bloom_adapt(self, n_new: int) -> None:
-        """Idle-off / resume-on hysteresis + growth resize (see __init__
-        and CrawlConfig.bloom_max_bits comments)."""
-        if self._bloom_bits is not None:
-            self._bloom_idle_steps = (self._bloom_idle_steps + 1
-                                      if n_new == 0 else 0)
-            if self._bloom_idle_steps >= 3:
-                self._bloom_bits = None
-                self._bloom_udf = None
-                self._bloom_suspended = True
-                self._bloom_idle_steps = 0
-                return
-            if 4 * self._seen_count > self._bloom_nbits:
-                # Seen-set growth has pushed the live bitmap under
-                # 4 bits/key — rebuild at the current right size (one
-                # executor-side pass over seen, amortized: pow2 sizing
-                # means at most one rebuild per 4x growth), or retire
-                # the prefilter if even the cap would saturate.
-                nbits = self._bloom_size_for(self._seen_count)
-                if nbits is None or nbits <= self._bloom_nbits:
-                    self._bloom_bits = None
-                    self._bloom_udf = None
-                    self._bloom_suspended = True
-                    return
-                self._bloom_nbits = nbits
-                self._bloom_bits = U.build_bloom_packed(
-                    self.seen, "url_fp", nbits)
-                self._bloom_dirty = True
-        elif self._bloom_suspended and n_new > 0:
-            self._bloom_suspended = False  # re-arm; next activation rebuilds
 
     def _claimed_canons(self, rows) -> set:
         """Prior prereq-canon claims visible to a batch's claim pass.
@@ -1471,7 +1304,6 @@ class CrawlJob:
             for r in grs:
                 g = (ck, r["host"])
                 surv = int(r["cnt"]) - kills_by_g.get(g, 0)
-                self._seen_count += surv
                 if surv == 0:
                     # Every row of the group was a killed prereq-shaped
                     # candidate — the oracle never attempts its host's
@@ -1488,15 +1320,6 @@ class CrawlJob:
                 dns_i, rob_i = ins_by_g[g]
                 w = int(dns_i) + int(rob_i)
                 if w:
-                    self._seen_count += w
-                    if self._bloom_bits is not None:
-                        host = r["host"]
-                        self._bloom_note(
-                            url_fp_py(canonicalize_py(u))
-                            for u, ins in (
-                                (f"dns:{host}", dns_i),
-                                (f"http://{host}/robots.txt", rob_i))
-                            if ins)
                     # Sequential-law base ordinal of this host's prereq
                     # items: surviving candidates before the host's first
                     # arrival + prerequisites inserted by earlier hosts.
@@ -1827,16 +1650,21 @@ class CrawlJob:
         Per-step Spark jobs (the scaling contract — every recurring
         exchange is either narrow (8-byte fps) or bounded by the burst):
 
-        1. burst materialization (salted bounded window → fetch law),
-        2. candidate batch materialization (extract → scope →
-           canonicalize; strings materialize once, never exchange),
-        3. narrow unseen-fp membership (bucket-aligned anti-join) + its
-           driver count (the broadcast-vs-shuffle attach decision),
-        4. candidate materialization (attach strings → dedup → ordinals),
-        5. ONE union-stats collect (burst effects + candidate counts +
-           per-queue min-earliest of untouched frontier rows — the virtual
-           clock input, so the clock itself costs no job),
-        6. frontier merge materialization.
+        1. burst materialization (bounded top-k over the two-tier
+           frontier → fetch law; the ok-count rides the same job),
+        2. narrow unseen-fp membership (bucket-aligned anti-join) over the
+           cached candidate batch (extract → scope → canonicalize; strings
+           materialize once, never exchange); its observed cardinality
+           is the broadcast-vs-shuffle attach decision,
+        3. candidate materialization (attach strings → dedup → ordinals),
+        4. ONE union-stats collect (burst effects + candidate counts).
+
+        Overlapped with 2-4 on daemon threads: the delta merge (processed
+        removal + retry re-enqueue) and, in pandas queue mode, the
+        per-queue min-earliest of untouched frontier rows — the virtual
+        clock input, so the clock itself costs no job.  New rows
+        materialize lazily under the seen-delta write; tier compactions
+        run only when removals/delta outgrow their fraction of the base.
 
         All queue-state updates are vectorized pandas merges; the only
         driver Python loops are over new queues and prereq-shaped
@@ -1877,21 +1705,8 @@ class CrawlJob:
                 salt = 1
         w = Window.partitionBy("class_key").orderBy(
             "directive", "cost", "ordinal")
-        if self.tiered:
-            a = (self._burst_topk_tiered(qdf, now, salt)
-                 .withColumn("_rn", F.col("_rn") - 1))
-        else:
-            elig = self.frontier_hot.join(self._maybe_bcast(qdf),
-                                          "class_key")
-            elig = elig.where(F.col("earliest_ts")
-                              <= F.greatest(F.col("wake_ts"),
-                                            F.col("_now")))
-            a = (top_k_per_queue(
-                    elig, ["class_key"],
-                    [F.col("directive"), F.col("cost"), F.col("ordinal")],
-                    cfg.burst_max, rank_col="_rn", salt_col="url_fp",
-                    salt_count=salt)
-                 .withColumn("_rn", F.col("_rn") - 1))
+        a = (self._burst_topk_tiered(qdf, now, salt)
+             .withColumn("_rn", F.col("_rn") - 1))
 
         # Preselector re-check (P1): re-apply the CURRENT scope fold to
         # the bounded burst.  Needs URL strings, so the burst joins the
@@ -2047,9 +1862,8 @@ class CrawlJob:
         n_ok = int(sel_obs.get["n_ok"] or 0)
         _mark("burst_ck")
 
-        # finished(): retry re-enqueue rows (shared by both frontier
-        # layouts; built here so the tiered delta merge below can start
-        # before the candidate pipeline).
+        # finished(): retry re-enqueue rows (built here so the delta
+        # merge below can start before the candidate pipeline).
         retry = (sel.where(F.col("event") == C.EV_RETRY)
                  .withColumn("retries", (F.col("retries") + 1).cast("int"))
                  .withColumn("earliest_ts",
@@ -2057,25 +1871,21 @@ class CrawlJob:
                               + F.lit(cfg.retry_delay_ms)).cast("long"))
                  .select(*HOT_COLS))
         sel_fps = sel.select("url_fp")
-        delta_fut = None
-        if self.tiered:
-            # Tiered delta merge, processed-removal + retry half: its
-            # only input is the materialized burst, so the job runs on a
-            # daemon thread OVERLAPPED with the candidate pipeline (the
-            # same pattern as the clock-input scan) instead of as a
-            # dedicated ~2 s serial phase at step end; the step's new
-            # discoveries union in lazily once the merge decisions are
-            # known.  Shuffle-hash, not broadcast: both sides are small
-            # (delta ~10^5 narrow rows, burst fps ~8 B each), so two
-            # parallel exchanges beat a driver-serial broadcast
-            # collect+build.  The base-side removal anti-join keeps its
-            # broadcast — its stream side is the whole base and must not
-            # exchange.
-            merged_base = (self._delta.join(sel_fps.hint("shuffle_hash"),
-                                            "url_fp", "left_anti")
-                           .unionByName(retry))
-            delta_fut = self._run_async(
-                lambda: self._ck(merged_base, parts=8))
+        # Delta merge, processed-removal + retry half: its only input is
+        # the materialized burst, so the job runs on a daemon thread
+        # OVERLAPPED with the candidate pipeline (the same pattern as the
+        # clock-input scan) instead of as a dedicated ~2 s serial phase at
+        # step end; the step's new discoveries union in lazily once the
+        # merge decisions are known.  Shuffle-hash, not broadcast: both
+        # sides are small (delta ~10^5 narrow rows, burst fps ~8 B each),
+        # so two parallel exchanges beat a driver-serial broadcast
+        # collect+build.  The base-side removal anti-join keeps its
+        # broadcast — its stream side is the whole base and must not
+        # exchange.
+        merged_base = (self._delta.join(sel_fps.hint("shuffle_hash"),
+                                        "url_fp", "left_anti")
+                       .unionByName(retry))
+        delta_fut = self._run_async(lambda: self._ck(merged_base, parts=8))
 
         # pandas mode: the clock-input scan (per-queue min-earliest of
         # untouched frontier rows) depends only on the materialized burst
@@ -2091,7 +1901,7 @@ class CrawlJob:
                                "url_fp", "left_anti")
                          .groupBy("class_key")
                          .agg(F.min("earliest_ts").alias("ome")))
-            rem_fut = self._collect_async(rem_stats)
+            rem_fut = self._run_async(rem_stats.collect)
 
         # --- post-fetch decide rules (S10) over the bounded ok-set --------
         pf = self._postfetch_flags(sel)
@@ -2210,9 +2020,6 @@ class CrawlJob:
                 if v is not None and (ck not in me or int(v) < me[ck]):
                     me[ck] = int(v)
             self._me_map = me
-        self._bloom_adapt(n_new)
-        self._bloom_fold_delta(c, n_new)
-        _mark("bloom_delta")
 
         # --- lineage / metrics / fetched (journal + stats + writer) --------
         # Pending sinks carry only hot columns + url_fp; URL strings are
@@ -2267,8 +2074,8 @@ class CrawlJob:
         # the cold table just appends the new rows' strings — retry rows'
         # strings are already present, removed rows' strings are dropped
         # lazily at checkpoint-time compaction.  (``retry`` was built
-        # right after the burst so the tiered delta merge could overlap
-        # the candidate pipeline.)
+        # right after the burst so the delta merge could overlap the
+        # candidate pipeline.)
         # One materialization of the step's new rows (strings included):
         # journal, seen delta, hot merge and the cold append all read this
         # frame — the cold union chain is then pure materialized scans,
@@ -2306,41 +2113,33 @@ class CrawlJob:
                 # and pins this frame; the seen delta, cold appends and
                 # journal then scan the blocks instead of re-running the
                 # fix-up windows.
-                new_rows = self._ck_lazy(
+                new_rows = self._ck(
                     c.join(adf, "class_key", "left_anti")
-                    .select(*NEW_COLS).unionByName(fin), parts=8)
+                    .select(*NEW_COLS).unionByName(fin), parts=8,
+                    eager=False)
             else:
                 new_rows = c.select(*NEW_COLS)
             self._journal_scheduled(new_rows)
         _mark("new_rows_ck")
-        if self.tiered:
-            # Tiered merge: processed fps join the removal chain (base
-            # rows leave via broadcast anti-join until compaction); the
-            # small delta alone is rewritten — retry re-enqueues were
-            # merged by the overlapped job launched after the burst, and
-            # the step's new rows union in LAZILY (their non-eager
-            # checkpoint materializes under the seen-delta write / next
-            # consuming job).  The untouched base is never copied.
-            self._removed.append(sel_fps)
-            self._removed_rows += n_processed
-            base_delta = delta_fut()
-            if n_new:
-                self._delta = base_delta.unionByName(
-                    new_rows.select(*HOT_COLS))
-                self._delta_rows += n_new
-            else:
-                self._delta = base_delta
-            _mark("delta_ck")
-            self._maybe_compact_tiers()
-            self._maybe_minor_compact()
-            self._refresh_hot_view()
+        # Frontier merge: processed fps join the removal chain (base rows
+        # leave via broadcast anti-join until compaction); the small delta
+        # alone is rewritten — retry re-enqueues were merged by the
+        # overlapped job launched after the burst, and the step's new rows
+        # union in LAZILY (their non-eager checkpoint materializes under
+        # the seen-delta write / next consuming job).  The untouched base
+        # is never copied.
+        self._removed.append(sel_fps)
+        self._removed_rows += n_processed
+        base_delta = delta_fut()
+        if n_new:
+            self._delta = base_delta.unionByName(new_rows.select(*HOT_COLS))
+            self._delta_rows += n_new
         else:
-            removed = self.frontier_hot.join(
-                F.broadcast(sel.select("url_fp")), "url_fp", "left_anti")
-            merged = removed.unionByName(retry)
-            if n_new:
-                merged = merged.unionByName(new_rows.select(*HOT_COLS))
-            self.frontier_hot = self._ck(merged)
+            self._delta = base_delta
+        _mark("delta_ck")
+        self._maybe_compact_tiers()
+        self._maybe_minor_compact()
+        self._refresh_hot_view()
         if n_new:
             self.frontier_cold = self.frontier_cold.unionByName(
                 new_rows.select(*COLD_COLS))
@@ -2381,7 +2180,6 @@ class CrawlJob:
             self.seen = self._ck(self.seen)
         if self.step % self.checkpoint_interval == 0:
             self.checkpoint()
-        self._maybe_activate_bloom()
         self._maybe_promote_queue_state()
         self._advance_clock()
         _marks.append(("tail", time.time()))
@@ -2603,8 +2401,6 @@ class CrawlJob:
                 r["class_key"]: int(r["me"]) for r in
                 job.frontier_hot.groupBy("class_key")
                 .agg(F.min("earliest_ts").alias("me")).collect()}
-        job._seen_count = job.seen.count()
-        job._maybe_activate_bloom()
         if not job.done:
             job._advance_clock()
         return job

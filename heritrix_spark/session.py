@@ -28,6 +28,15 @@ import re
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half the box's physical memory: a local-mode heap
+    limit above what the box has lets G1 grow the heap until the kernel
+    OOM-kills the JVM mid-run."""
+    total_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                / 2**30)
+    return f"{max(1, min(48, int(total_gb // 2)))}g"
+
+
 def get_spark(
     app_name: str = "heritrix_spark",
     cores: int | None = None,
@@ -58,7 +67,8 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # Engine arithmetic (hash-derived ints) relies on Java long semantics.
         .config("spark.sql.ansi.enabled", "false")

@@ -167,20 +167,6 @@ def test_scope_recheck_mid_crawl_equivalence(spark, tmp_path):
     assert oos, "no queued item was re-rejected — test is vacuous"
 
 
-def test_bloom_prefilter_equivalence(spark, tmp_path):
-    """With the broadcast bloom URL-seen prefilter forced active from
-    step 0, the crawl is event-identical to the oracle — the bloom only
-    routes candidates, it never drops (north_rule: exact seen set)."""
-    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
-                        use_bloom_prefilter=True,
-                        bloom_min_seen=0, bloom_bits=1 << 16)
-    sim, job = _run_pair(spark, tmp_path, "tiny", cfg, 8)
-    _assert_equal(sim, job)
-    assert job._bloom_was_active  # the prefilter really ran
-    if job._bloom_bits is not None:
-        assert job._bloom_bits.any()
-
-
 def test_queue_state_dataframe_equivalence(spark, tmp_path):
     """F3/F6 at design scale: queue_state_mode='dataframe' keeps queues +
     host_state as Spark frames merged by join (no O(#queues) driver
@@ -325,15 +311,23 @@ def test_host_settings_overrides_equivalence(spark, tmp_path, qmode):
     assert any(q.sgroup == 2 for q in sim.queues.values())
 
 
-def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path):
-    """image_probe='bucketed' (the 10^10-image path): the id projection is
-    written once as a bucketed+sorted table, the crawl is event-identical
-    to the oracle, and the per-step probe join has NO Exchange and NO Sort
-    on the images side — only the work-proportional burst shuffles."""
+@pytest.mark.parametrize("probe", ["array", "bucketed"])
+def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path,
+                                                   monkeypatch, probe):
+    """The two large-corpus image probes, forced on the tiny corpus by
+    lowering CrawlJob's size thresholds: 'array' (the once-built sorted
+    id array probed by an Arrow UDF) and 'bucketed' (the 10^10-image
+    path: the id projection is written once as a bucketed+sorted table).
+    Either way the crawl is event-identical to the oracle; for 'bucketed'
+    the per-step probe join has NO Exchange and NO Sort on the images
+    side — only the work-proportional burst shuffles."""
+    monkeypatch.setattr(CrawlJob, "IMG_ARRAY_ROWS", -1)
+    if probe == "bucketed":
+        monkeypatch.setattr(CrawlJob, "IMG_BUCKETED_ROWS", -1)
+        monkeypatch.setattr(CrawlJob, "IMG_PROBE_BUCKETS", 8)
     spec = websim.SPECS["tiny"]
     paths = gen.write_fixture(spec, str(tmp_path / "fix_bp"))
-    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
-                        image_probe="bucketed", image_probe_buckets=8)
+    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes())
     sim = HeritrixSim(spec, cfg)
     sim.schedule_seeds(websim.seeds(spec))
     sim.run(8)
@@ -345,6 +339,9 @@ def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path):
     job.schedule_seeds(websim.seeds(spec))
     job.run(8)
     _assert_equal(sim, job)
+    if probe == "array":
+        assert job._img_exists_udf is not None and job.image_ids is None
+        return
     # Plan shape: storage-partitioned probe join — bucketed scan on the
     # images side (no Exchange, no Sort), one Exchange total (burst side).
     burst = spark.range(500).select(F.col("id").alias("image_num"))
@@ -388,17 +385,6 @@ def test_small_prefix_equivalence(spark, tmp_path):
     cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes())
     sim, job = _run_pair(spark, tmp_path, "small", cfg, 12)
     _assert_equal(sim, job)
-
-
-def test_frontier_tiers_off_equivalence(spark, tmp_path):
-    """The single-frame fallback (frontier_tiers=False) implements the
-    identical superstep law — the tiered default is equivalence-tested by
-    every other test in this file; this one guards the fallback."""
-    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
-                        cost_policy="wag", frontier_tiers=False)
-    sim, job = _run_pair(spark, tmp_path, "tiny", cfg, None)
-    _assert_equal(sim, job)
-    assert job.done
 
 
 def test_tiered_base_no_shuffle_no_sort(spark, tmp_path):
@@ -463,3 +449,14 @@ def test_postfetch_gates_equivalence(spark, tmp_path):
     assert expected, "write gate passed nothing — vacuous"
     assert len(expected) < total_ok, "write gate rejected nothing — vacuous"
     assert fetched == expected
+
+
+def test_bad_queue_state_mode_rejected(spark, tmp_path):
+    spec = websim.SPECS["tiny"]
+    paths = gen.write_fixture(spec, str(tmp_path / "fix_badq"))
+    with pytest.raises(ValueError, match="queue_state_mode"):
+        CrawlJob(spark, spec, C.CrawlConfig(queue_state_mode="datframe"),
+                 images=spark.read.parquet(paths["images"]),
+                 robots_rules=spark.read.parquet(paths["robots"]),
+                 host_config=spark.read.parquet(paths["host_config"]),
+                 work_dir=str(tmp_path / "work_badq"))

@@ -83,10 +83,7 @@ def main():
         job.superstep()
     print(json.dumps({"probe": "state", "base_rows": job._base_rows,
                       "removed_rows": job._removed_rows,
-                      "delta_rows": job._delta_rows,
-                      "seen": job._seen_count,
-                      "bloom_nbits": job._bloom_nbits,
-                      "bloom_active": job._bloom_bits is not None}),
+                      "delta_rows": job._delta_rows}),
           flush=True)
 
     now = job.now
